@@ -100,12 +100,27 @@ def _extract_one(doc_id: str, span_records: list[dict], partition_id: int, cfg) 
     return row
 
 
+# Arrow bytes per to_pylist slice. Small enough that a slot-sized
+# partition (one task per slot, tens of MB) never lives as Python
+# objects all at once; large enough that the per-slice conversion
+# overhead is noise next to the per-doc extraction.
+MAX_SLICE_BYTES = 1024 * 1024
+
+
 def make_extract_arrow_fn(cfg: EngineConfig = DEFAULT):
     """mapInArrow variant: RecordBatch → list-of-dicts → RecordBatch,
     all through pyarrow's C conversion paths. The pandas route
     materializes every nested span struct as Python objects through
     pandas' block manager twice (in and out); arrow→pylist→arrow skips
     that entirely (measured ~30% of UDF wall)."""
+    # Byte-bounded sub-batching: maxRecordsPerBatch is a ROW cap,
+    # so a giant-doc stripe (salted_repartition groups >1 MB docs
+    # together) could hand us a multi-GB batch; to_pylist would
+    # materialize it as Python objects at ~5-10× the Arrow bytes.
+    # Slicing by buffer size bounds peak Python memory regardless
+    # of the session's row cap and of the partition size. Read on the
+    # driver, so the closure carries the value to the workers.
+    max_slice_bytes = MAX_SLICE_BYTES
 
     def extract_batches(batches):
         import pyarrow as pa
@@ -114,14 +129,6 @@ def make_extract_arrow_fn(cfg: EngineConfig = DEFAULT):
         arrow_schema = _arrow_output_schema()
         ctx = TaskContext.get()
         partition_id = ctx.partitionId() if ctx is not None else -1
-
-        # Byte-bounded sub-batching: maxRecordsPerBatch is a ROW cap,
-        # so a giant-doc stripe (salted_repartition groups >1 MB docs
-        # together) could hand us a multi-GB batch; to_pylist would
-        # materialize it as Python objects at ~5-10× the Arrow bytes.
-        # Slicing by buffer size bounds peak Python memory regardless
-        # of the session's row cap.
-        max_slice_bytes = cfg.target_partition_bytes
 
         def slices(batch):
             if batch.nbytes <= max_slice_bytes or batch.num_rows <= 1:

@@ -25,6 +25,8 @@ consumer: detected hot users route through the salted exact plan.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -141,11 +143,38 @@ def hot_key_salted_repartition(
     return salted.repartition(num_partitions, F.col(key_col), F.col("salt"))
 
 
-def partitions_for(df: DataFrame, cfg: EngineConfig = DEFAULT, minimum: int = 8) -> int:
-    """Size the partition count so a partition ≈ target_partition_bytes
-    of HTML (one well-sized Arrow batch, SURVEY §4 'bounded concurrency').
+class Sizing(NamedTuple):
+    partitions: int
+    oversize_docs: int
 
-    Driver-side single-row agg — cheap (sum pushes down columnar)."""
+
+def is_oversize(cfg: EngineConfig = DEFAULT):
+    """Docs past the byte cap go to quarantine instead of the UDF (S2)."""
+    return F.col("n_bytes") > cfg.max_html_bytes
+
+
+def partitions_for(df: DataFrame, cfg: EngineConfig = DEFAULT) -> Sizing:
+    """Size the extraction stage and count the docs it will quarantine,
+    in ONE driver-side aggregate over df (sum and count push down
+    columnar).
+
+    A partition carries ≈ target_partition_bytes of within-cap HTML
+    (one well-sized Arrow batch, SURVEY §4 'bounded concurrency'), but
+    never fewer partitions than the session's task slots
+    (defaultParallelism): every Python task pays a fixed start-up cost
+    (worker hand-off plus PySpark's per-task import-cache reset: about
+    180 ms of slot time against 14 ms for a JVM task on a 4-vCPU host at
+    local[2]; tools/python_task_cost.py re-measures it), so tasks beyond
+    one per slot buy nothing on a small input, and fewer leave slots
+    idle."""
     df = with_doc_bytes(df)
-    total = df.agg(F.sum("n_bytes").alias("b")).collect()[0]["b"] or 0
-    return max(minimum, int(total // cfg.target_partition_bytes) + 1)
+    over = is_oversize(cfg)
+    row = df.agg(
+        F.sum(F.when(~over, F.col("n_bytes"))).alias("b"),
+        F.count(F.when(over, 1)).alias("n_over"),
+    ).collect()[0]
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    return Sizing(
+        partitions=max(slots, int((row["b"] or 0) // cfg.target_partition_bytes) + 1),
+        oversize_docs=row["n_over"],
+    )

@@ -24,7 +24,7 @@ from ..functions import columns as C
 from ..operators.extract import extract_spans, strip_metrics
 from ..operators.lineage import lineage_rollup
 from ..operators.resume import remaining_documents
-from ..operators.skew import partitions_for, salted_repartition, with_doc_bytes
+from ..operators.skew import is_oversize, partitions_for, salted_repartition, with_doc_bytes
 from ..sources.catalog import TableCatalog
 
 EXTRACTED_TABLE = "extracted"
@@ -46,7 +46,7 @@ def validated(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
             "route_tag", C.route_tag_expr(F.col("host"))
         )
     # Oversize docs route to quarantine instead of killing tasks (S2).
-    return out.withColumn("oversize", F.col("n_bytes") > cfg.max_html_bytes)
+    return out.withColumn("oversize", is_oversize(cfg))
 
 
 def _parse_bytes_conf(v: str) -> int:
@@ -154,7 +154,15 @@ def run_extraction(
     I/O for nothing (measured: the shuffle cost 2-4× the extraction
     compute). The salted shuffle earns its cost only when the input
     arrives in few/skewed partitions (a handful of giant files, or a
-    filter that gutted most partitions)."""
+    filter that gutted most partitions).
+
+    Sizing: one aggregate over the remaining docs (partitions_for)
+    gives the stage's byte total and the oversize count. The stage gets
+    bytes / target_partition_bytes partitions, but at least one per
+    task slot (defaultParallelism) and no more on a small input: each
+    Python task costs a fixed ~180 ms of worker start-up, so a fixed
+    floor above the slot count paid that cost several times per slot.
+    The _quarantine append runs only when the count is non-zero."""
     run_id = run_id or uuid.uuid4().hex[:12]
 
     df = validated(src, cfg)
@@ -169,21 +177,28 @@ def run_extraction(
         df, done, engine_version=cfg.engine_version, max_age_hours=cfg.reextract_ttl_hours
     )
 
+    # The one sizing job: stage byte total and oversize count together.
+    # Without a catalog nothing is quarantined, so a caller-set
+    # partition count makes it unnecessary.
+    sizing = partitions_for(todo, cfg) if not num_partitions or catalog is not None else None
+    nparts = num_partitions or sizing.partitions
     quarantined = todo.filter(F.col("oversize"))
     todo = todo.filter(~F.col("oversize"))
-
-    nparts = num_partitions or partitions_for(todo, cfg)
     # Logical-plan partition estimate (no .rdd conversion — that would
     # sidestep AQE's view of the plan and force an analysis round-trip
     # on the driver): leaf scan partitions from the file sizes. The
     # estimate runs on the SOURCE plan (df), not todo — todo's leaf
     # files include the committed-output side of the resume anti-join,
     # which would inflate the estimate and wrongly skip the shuffle.
+    # The lower bound is at least the slot count, so 'auto' never runs
+    # the UDF on fewer scan partitions than there are slots (on 2 slots
+    # nparts // 2 can be 1, which no estimate is below).
     src_parts = _estimated_scan_partitions(spark, df)
+    slots = spark.sparkContext.defaultParallelism
     needs_shuffle = repartition == "force" or (
         repartition == "auto"
         and src_parts is not None
-        and (src_parts < max(nparts // 2, 1) or src_parts > nparts * 4)
+        and (src_parts < max(nparts // 2, slots) or src_parts > nparts * 4)
     )
     if needs_shuffle:
         todo = salted_repartition(todo, nparts, cfg)
@@ -207,16 +222,19 @@ def run_extraction(
         extracted = catalog.read(EXTRACTED_TABLE)
         lineage = catalog.read(LINEAGE_TABLE).filter(F.col("run_id") == run_id)
         # Oversize docs (S2 byte cap) go to a quarantine table instead of
-        # killing tasks — metadata only, never the giant payload.
-        catalog.append(
-            quarantined.select(
-                F.lit(run_id).alias("run_id"),
-                "doc_id",
-                "n_bytes",
-                F.lit("oversize").alias("reason"),
-            ),
-            QUARANTINE_TABLE,
-        )
+        # killing tasks — metadata only, never the giant payload. The
+        # append re-runs the source scan and the resume anti-join, so it
+        # runs only when the sizing job counted something to quarantine.
+        if sizing.oversize_docs:
+            catalog.append(
+                quarantined.select(
+                    F.lit(run_id).alias("run_id"),
+                    "doc_id",
+                    "n_bytes",
+                    F.lit("oversize").alias("reason"),
+                ),
+                QUARANTINE_TABLE,
+            )
     else:
         lineage = lineage_rollup(with_metrics, run_id)
         extracted = strip_metrics(with_metrics)

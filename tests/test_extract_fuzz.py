@@ -37,19 +37,16 @@ def test_garbage_never_raises(spans):
     assert [s["offset"] for s in result.spans] == list(range(len(result.spans)))
 
 
-def test_arrow_batch_slicing_bounds_python_materialization(spark):
-    """A batch whose Arrow buffers exceed target_partition_bytes must be
+def test_arrow_batch_slicing_bounds_python_materialization(spark, monkeypatch):
+    """A batch whose Arrow buffers exceed MAX_SLICE_BYTES must be
     processed in byte-bounded slices — same results, bounded memory."""
-    from dataclasses import replace
-
-    from claude_readability_hook_spark.config import DEFAULT
-    from claude_readability_hook_spark.operators.extract import extract_spans
+    from claude_readability_hook_spark.operators import extract
     from claude_readability_hook_spark.sources.corpus import fixtures_df
 
-    small_cfg = replace(DEFAULT, target_partition_bytes=2048)  # force slicing
     src = fixtures_df(spark).coalesce(1)
-    sliced = {r["doc_id"]: (r["engine"], r["success"], len(r["spans"]))
-              for r in extract_spans(src, small_cfg).collect()}
     whole = {r["doc_id"]: (r["engine"], r["success"], len(r["spans"]))
-             for r in extract_spans(src).collect()}
+             for r in extract.extract_spans(src).collect()}
+    monkeypatch.setattr(extract, "MAX_SLICE_BYTES", 2048)  # force slicing
+    sliced = {r["doc_id"]: (r["engine"], r["success"], len(r["spans"]))
+              for r in extract.extract_spans(src).collect()}
     assert sliced == whole and len(sliced) == src.count()

@@ -135,6 +135,34 @@ def test_oversize_docs_quarantined_not_extracted(spark, tmp_path):
     assert quarantined[0]["n_bytes"] > 1000
 
 
+def test_run_without_oversize_docs_writes_no_quarantine(spark, tmp_path):
+    catalog = TableCatalog(spark, str(tmp_path), use_iceberg=False)
+    run_extraction(spark, fixtures_df(spark), catalog=catalog, run_id="nq")
+    assert catalog.exists("extracted")
+    assert not catalog.exists("_quarantine")
+    assert not (tmp_path / "_quarantine").exists()
+
+
+def test_catalog_run_job_count_is_pinned(spark, tmp_path):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"run-extraction-{uuid.uuid4().hex[:8]}"
+    catalog = TableCatalog(spark, str(tmp_path), use_iceberg=False)
+    sc.setJobGroup(group, "run_extraction job count")
+    try:
+        run_extraction(spark, fixtures_df(spark), catalog=catalog, run_id="jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # On local[4] with AQE (each shuffle map stage is a job of its own):
+    # the sizing aggregate (2), the salted repartition and the
+    # checkpointed extraction (3), the output append (1), the lineage
+    # rollup and append (3) and the schema-merging read-back (1). No
+    # _quarantine append: no doc is oversize.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+
+
 def test_cache_hits_complement(spark):
     from claude_readability_hook_spark.operators.resume import cache_hits, remaining_documents
 

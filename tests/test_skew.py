@@ -77,9 +77,44 @@ def test_giants_never_share_partition_with_full_normal_load(spark):
 def test_partitions_for_scales_with_bytes(spark):
     cfg = EngineConfig(target_partition_bytes=100_000)
     df = _corpus_with_giants(spark, n_normal=400, n_giant=8)
-    n = partitions_for(df, cfg)
+    n = partitions_for(df, cfg).partitions
     # ~2.3 MB total / 100 KB target ≈ 24 partitions
     assert 20 <= n <= 32
+
+
+def test_partitions_for_floor_is_the_slot_count(spark):
+    df = _corpus_with_giants(spark, n_normal=5, n_giant=1)
+    slots = spark.sparkContext.defaultParallelism
+    assert partitions_for(df) == (slots, 0)
+    # the same aggregate counts the docs past the byte cap, and leaves
+    # their bytes out of the sizing
+    capped = EngineConfig(max_html_bytes=100_000, target_partition_bytes=1_000)
+    assert partitions_for(df, capped) == (max(slots, 6), 1)
+
+
+def test_one_file_source_below_slot_count_gets_salted_exchange(spark, tmp_path):
+    """At the slot floor nparts // 2 is half the slots; a source whose
+    scan estimate sits between that and the slot count must still be
+    spread by the salted repartition before the UDF."""
+    import glob
+    import os
+
+    from claude_readability_hook_spark.plans.pipeline import run_extraction
+
+    path = str(tmp_path / "src")
+    _corpus_with_giants(spark, n_normal=40, n_giant=0).coalesce(1).write.parquet(path)
+    size = sum(os.path.getsize(f) for f in glob.glob(f"{path}/*.parquet"))
+    slots = spark.sparkContext.defaultParallelism
+    assert slots >= 4
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(size // 2 + 1))  # one file, estimated 2 scan partitions
+    try:
+        extracted = run_extraction(spark, spark.read.parquet(path), catalog=None).extracted
+        plan = extracted._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "Exchange hashpartitioning(xxhash64(doc_id" in plan, plan
 
 
 def test_determinism_same_input_same_partitioning(spark):
